@@ -135,19 +135,23 @@ def _build_once(path: str, build: Callable[[], None], timeout_s: float = 300.0) 
                 pass
 
 
-def _fixture_table(spark: SparkSession, sf_dir: str) -> ParquetSnapshotTable:
-    """Build-once lifecycle fixture: 7 snapshots exercising append,
-    equality delete, compact, and rollback.  doc_id < 400 rows exist at
-    every SF, so the metadata is identical no matter which sf_dir first
-    built the fixture."""
-    t = ParquetSnapshotTable(spark, FIXTURE_PATH)
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The fixtures' input: `documents` rows with doc_id < 400, present at
+    every scale factor."""
+    return (
+        load_table(spark, sf_dir, "documents")
+        .filter("doc_id < 400")
+        .select("doc_id", "lang", "source")
+    )
+
+
+def _lifecycle_fixture(spark: SparkSession, sf_dir: str, path: str) -> ParquetSnapshotTable:
+    """Build-once lifecycle fixture at `path`: 7 snapshots exercising
+    append, equality delete, compact, and rollback."""
+    t = ParquetSnapshotTable(spark, path)
 
     def build() -> None:
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .filter("doc_id < 400")
-            .select("doc_id", "lang", "source")
-        )
+        docs = _documents(spark, sf_dir)
         t.create(["doc_id", "lang", "source"])
         t.append(docs.filter("doc_id % 2 = 0"), num_files=2)
         t.append(docs.filter("doc_id % 2 = 1"), num_files=2)
@@ -156,8 +160,14 @@ def _fixture_table(spark: SparkSession, sf_dir: str) -> ParquetSnapshotTable:
         t.rollback_to(3)
         t.delete_where("doc_id % 10 = 7", mode="equality", equality_columns=["doc_id"])
 
-    _build_once(FIXTURE_PATH, build)
+    _build_once(path, build)
     return t
+
+
+def _fixture_table(spark: SparkSession, sf_dir: str) -> ParquetSnapshotTable:
+    """The shared lifecycle fixture.  Its metadata is identical no matter
+    which sf_dir first built it (doc_id < 400 rows exist at every SF)."""
+    return _lifecycle_fixture(spark, sf_dir, FIXTURE_PATH)
 
 
 @query(
@@ -250,11 +260,7 @@ def _parts_fixture_table(spark: SparkSession, sf_dir: str) -> ParquetSnapshotTab
     t = ParquetSnapshotTable(spark, PARTS_FIXTURE_PATH)
 
     def build() -> None:
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .filter("doc_id < 400")
-            .select("doc_id", "lang", "source")
-        )
+        docs = _documents(spark, sf_dir)
         t.create(["doc_id", "lang", "source"], partition_by=["lang"])
         t.append(docs.filter("doc_id % 2 = 0"), num_files=1)
         t.append(docs.filter("doc_id % 2 = 1"), num_files=1)
@@ -350,24 +356,7 @@ def _value_fixture_table(spark: SparkSession, sf_dir: str) -> ParquetSnapshotTab
     queries above don't need this (their oracles read the fixture's own
     frozen JSON, so both engines see identical data at any SF)."""
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    t = ParquetSnapshotTable(spark, f"{FIXTURE_PATH}_{sf_tag}")
-
-    def build() -> None:
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .filter("doc_id < 400")
-            .select("doc_id", "lang", "source")
-        )
-        t.create(["doc_id", "lang", "source"])
-        t.append(docs.filter("doc_id % 2 = 0"), num_files=2)
-        t.append(docs.filter("doc_id % 2 = 1"), num_files=2)
-        t.delete_where("doc_id % 10 = 3", mode="equality", equality_columns=["doc_id"])
-        t.compact(target_files=2)
-        t.rollback_to(3)
-        t.delete_where("doc_id % 10 = 7", mode="equality", equality_columns=["doc_id"])
-
-    _build_once(t.path, build)
-    return t
+    return _lifecycle_fixture(spark, sf_dir, f"{FIXTURE_PATH}_{sf_tag}")
 
 
 @query(
@@ -492,8 +481,6 @@ def meta_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang-bounded rollup; at lakehouse scale the anti-joins prune to the
     files the manifests mark as changed."""
     t = _value_fixture_table(spark, sf_dir)
-    import pyspark.sql.functions as F
-
     before_v = t.read(version=2, with_row_id=False).select("lang", "doc_id")
     after_v = t.read(with_row_id=False).select("lang", "doc_id")
     removed = before_v.join(after_v, "doc_id", "left_anti")

@@ -1,13 +1,12 @@
 """Local twin of the driver's DuckDB-oracle correctness compare.
 
 Runs a registered Spark query and its oracle SQL side-by-side and compares
-row count, sorted column names, and an order-insensitive value hash — so
+row count, sorted column names, and the order-insensitive sorted rows — so
 mismatches are caught (with per-column diagnostics) before the driver runs.
 """
 
 from __future__ import annotations
 
-import hashlib
 import math
 from dataclasses import dataclass, field
 from datetime import date, datetime
@@ -71,16 +70,6 @@ def canonical_rows(df: pd.DataFrame) -> tuple[list[str], list[str]]:
     ]
     rows.sort()
     return cols, rows
-
-
-def value_hash(df: pd.DataFrame) -> str:
-    cols, rows = canonical_rows(df)
-    h = hashlib.sha256()
-    h.update(("|".join(cols)).encode())
-    for r in rows:
-        h.update(r.encode())
-        h.update(b"\n")
-    return h.hexdigest()
 
 
 @dataclass

@@ -33,6 +33,17 @@ Semantics mapping (reference → here):
 - `updateSpec().addField/removeField` → `set_partition_fields`
   (`IcebergTableGenerator.java:94-101`)
 
+Inside `ParquetSnapshotTable` each decision has one home:
+- `_resolve` answers "which snapshot?" for every reader and writer
+  (`version` / `ref` / `as_of_timestamp_ms`, default the `main` head); an
+  unknown version or ref raises `ValueError`.  `_refs` is the one refs
+  view: `main` is the log tail until `refs.json` exists.
+- `_read_json` / `_write_json` are the JSON store (`.tmp` + `os.replace`)
+  for `metadata.json`, `refs.json` and `file_stats.json`.
+- `_write_data_files` and `_write_delete_file` write files and return the
+  metadata entries that `_commit`, the one path that appends a snapshot,
+  records.
+
 Scale posture: data/delete files are plain columnar Parquet readable by any
 executor count; the metadata log is O(snapshots) JSON (driver-side, tiny);
 reads are `spark.read.parquet(*files)` + one broadcast-able anti-join on
@@ -117,14 +128,15 @@ class ConcurrentCommitError(RuntimeError):
     """Another writer committed between read and commit (optimistic CAS)."""
 
 
-def _file_path_norm() -> Column:
-    """`_metadata.file_path` with the URI scheme stripped — exactly the
+def _norm_path(path: Column) -> Column:
+    """A scan's file path (`_metadata.file_path`, or the row id's `file`,
+    which is built from it) with the URI scheme stripped — exactly the
     absolute path string the metadata log records, so per-file attributes
     (the data sequence number) attach with ONE constant-size broadcast
     equi-join instead of one plan node per file (which made `read()`
     analysis cost O(snapshots); the reference's flagship scenario is a
     100-delete-commit table, `Main.java:311-326`)."""
-    return F.regexp_replace(F.col("_metadata.file_path"), r"^file:/+", "/")
+    return F.regexp_replace(path, r"^file:/+", "/")
 
 
 def _schema_sig(schema) -> str:
@@ -296,46 +308,88 @@ class ParquetSnapshotTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self._meta_path = os.path.join(path, "metadata.json")
 
-    # -- metadata -----------------------------------------------------------
+    # -- JSON store ---------------------------------------------------------
+    # metadata.json (the snapshot log), refs.json and file_stats.json are
+    # plain JSON arrays (indent=1) that the metadata-table oracles read
+    # directly with DuckDB `read_json(format='array')`.  Every write is a
+    # whole-file `.tmp` + atomic rename, HadoopTableOperations-style.
+    def _read_json(self, name: str) -> list | None:
+        path = os.path.join(self.path, name)
+        if not os.path.exists(path):
+            return None
+        with open(path) as f:
+            return json.load(f)
+
+    def _write_json(self, name: str, records: list) -> None:
+        path = os.path.join(self.path, name)
+        with open(path + ".tmp", "w") as f:
+            json.dump(records, f, indent=1)
+        os.replace(path + ".tmp", path)
+
     def _load(self) -> list[Snapshot]:
-        with open(self._meta_path) as f:
-            return [Snapshot(**s) for s in json.load(f)]
+        return [Snapshot(**s) for s in self._read_json("metadata.json")]
 
     def _save(self, snaps: list[Snapshot]) -> None:
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump([vars(s) for s in snaps], f, indent=1)
-        os.replace(tmp, self._meta_path)  # atomic commit, HadoopTableOperations-style
+        self._write_json("metadata.json", [vars(s) for s in snaps])
 
     # -- refs (Iceberg branches & tags) -------------------------------------
     # Stored beside the snapshot log (refs.json, an ARRAY of {name,
-    # snapshot_id, type} records), never inside it — both the log and the
-    # refs file stay plain JSON arrays that the metadata-table oracles
-    # read directly with DuckDB `read_json(format='array')`.  Until the
-    # first create_branch/create_tag the file doesn't exist and `main` is
-    # implicitly the log tail (zero overhead for unbranched tables).
-    @property
-    def _refs_path(self) -> str:
-        return os.path.join(self.path, "refs.json")
-
+    # snapshot_id, type} records), never inside it.  Only create_branch /
+    # create_tag materialize the file; until then `main` is implicitly the
+    # log tail (zero overhead for unbranched tables).
     def _load_refs(self) -> dict | None:
-        if not os.path.exists(self._refs_path):
+        """The stored refs, or None before the first branch/tag."""
+        stored = self._read_json("refs.json")
+        if stored is None:
             return None
-        with open(self._refs_path) as f:
-            return {
-                r["name"]: {"snapshot_id": r["snapshot_id"], "type": r["type"]}
-                for r in json.load(f)
-            }
+        return {
+            r["name"]: {"snapshot_id": r["snapshot_id"], "type": r["type"]}
+            for r in stored
+        }
 
     def _save_refs(self, refs: dict) -> None:
-        tmp = self._refs_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                [{"name": n, **v} for n, v in sorted(refs.items())], f, indent=1
-            )
-        os.replace(tmp, self._refs_path)
+        self._write_json("refs.json", [{"name": n, **v} for n, v in sorted(refs.items())])
+
+    def _refs(self, snaps: list[Snapshot]) -> dict:
+        """The refs view every reader uses: the stored refs, or the
+        implicit `main` branch at the log tail."""
+        return self._load_refs() or {
+            "main": {"snapshot_id": snaps[-1].snapshot_id, "type": "branch"}
+        }
+
+    def _resolve(
+        self,
+        snaps: list[Snapshot],
+        version: int | None = None,
+        ref: str | None = None,
+        as_of_timestamp_ms: int | None = None,
+    ) -> Snapshot:
+        """The one answer to "which snapshot?": `version` by id, `ref` by
+        branch/tag name, `as_of_timestamp_ms` as the last snapshot
+        committed at or before that wall-clock; default the `main` head."""
+        if sum(x is not None for x in (version, as_of_timestamp_ms, ref)) > 1:
+            raise ValueError("pass at most one of version / as_of_timestamp_ms / ref")
+        if as_of_timestamp_ms is not None:
+            eligible = [s for s in snaps if s.timestamp_ms <= as_of_timestamp_ms]
+            if not eligible:
+                raise ValueError(
+                    f"no snapshot at or before {as_of_timestamp_ms} "
+                    f"(oldest is {snaps[0].timestamp_ms})"
+                )
+            return eligible[-1]
+        if version is None:
+            refs = self._refs(snaps)
+            name = ref or "main"
+            if name not in refs:
+                raise ValueError(f"unknown ref {name!r}")
+            version = refs[name]["snapshot_id"]
+        for s in snaps:
+            if s.snapshot_id == version:
+                return s
+        raise ValueError(
+            f"no snapshot {version}; table has versions 0..{snaps[-1].snapshot_id}"
+        )
 
     # -- per-file stats sidecar (Iceberg manifest record_count/partition) ---
     # Files are immutable, so their stats are table-level facts: one array
@@ -346,25 +400,18 @@ class ParquetSnapshotTable:
     # return (path, record_count, partition) with the commit — the
     # driver-side parquet-footer read below stands in for that on local
     # filesystems (a footer read is metadata-only, no row data touched).
-    @property
-    def _stats_path(self) -> str:
-        return os.path.join(self.path, "file_stats.json")
-
     def _load_stats(self) -> dict[str, dict]:
-        if not os.path.exists(self._stats_path):
-            return {}
-        with open(self._stats_path) as f:
-            return {r["file_path"]: r for r in json.load(f)}
+        return {r["file_path"]: r for r in self._read_json("file_stats.json") or []}
 
     def _record_new_file_stats(self, entries: list) -> None:
+        import pyarrow.parquet as pq
+
         stats = self._load_stats()
         new = False
         for e in entries:
             path = e[0]
             if path in stats or not os.path.isfile(path):
                 continue  # dir-registered external roots: inferred at read
-            import pyarrow.parquet as pq
-
             parts = [
                 seg
                 for seg in os.path.relpath(path, self.path).split(os.sep)
@@ -378,12 +425,8 @@ class ParquetSnapshotTable:
                 "bounds": _footer_column_bounds(meta),
             }
             new = True
-        if not new:
-            return
-        tmp = self._stats_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump([stats[k] for k in sorted(stats)], f, indent=1)
-        os.replace(tmp, self._stats_path)
+        if new:
+            self._write_json("file_stats.json", [stats[k] for k in sorted(stats)])
 
     def _prune_entries(self, entries: list, where: str | None) -> list:
         """Manifest-level file selection for a predicate: drop entries whose
@@ -413,19 +456,12 @@ class ParquetSnapshotTable:
     def _head(self, branch: str = "main") -> tuple[Snapshot, int]:
         """(head snapshot of `branch`, next global snapshot id).  Snapshot
         ids stay globally monotonic across branches (Iceberg allocates
-        snapshot ids table-wide; refs just point into the log)."""
+        snapshot ids table-wide; refs just point into the log).  Writes
+        target branches only: a tag or an unknown name raises."""
         snaps = self._load()
-        refs = self._load_refs()
-        if refs is None:
-            if branch != "main":
-                raise ValueError(f"unknown branch {branch!r}; create_branch() first")
-            head = snaps[-1]
-        else:
-            ref = refs.get(branch)
-            if ref is None or ref["type"] != "branch":
-                raise ValueError(f"{branch!r} is not a branch")
-            head = next(s for s in snaps if s.snapshot_id == ref["snapshot_id"])
-        return head, snaps[-1].snapshot_id + 1
+        if self._refs(snaps).get(branch, {}).get("type") != "branch":
+            raise ValueError(f"{branch!r} is not a branch; create_branch() first")
+        return self._resolve(snaps, ref=branch), snaps[-1].snapshot_id + 1
 
     def _commit(
         self,
@@ -467,25 +503,23 @@ class ParquetSnapshotTable:
             self._save_refs(refs)
         return snap
 
-    def create_branch(self, name: str, version: int | None = None) -> None:
-        """Iceberg `CREATE BRANCH`: a named, writable head.  Materializes
-        refs.json on first use with `main` pinned to the current tail."""
-        refs = self._load_refs() or {
-            "main": {"snapshot_id": self._load()[-1].snapshot_id, "type": "branch"}
-        }
+    def _set_ref(self, name: str, version: int | None, kind: str) -> None:
+        """Point ref `name` (a 'branch' or 'tag') at `version`, default the
+        `main` head.  Materializes refs.json on first use, with `main`
+        pinned to the current tail."""
+        refs = self._refs(self._load())
         at = refs["main"]["snapshot_id"] if version is None else version
-        refs[name] = {"snapshot_id": at, "type": "branch"}
+        refs[name] = {"snapshot_id": at, "type": kind}
         self._save_refs(refs)
+
+    def create_branch(self, name: str, version: int | None = None) -> None:
+        """Iceberg `CREATE BRANCH`: a named, writable head."""
+        self._set_ref(name, version, "branch")
 
     def create_tag(self, name: str, version: int | None = None) -> None:
         """Iceberg `CREATE TAG`: an immutable named snapshot pointer
         (commits to a tag are refused)."""
-        refs = self._load_refs() or {
-            "main": {"snapshot_id": self._load()[-1].snapshot_id, "type": "branch"}
-        }
-        at = refs["main"]["snapshot_id"] if version is None else version
-        refs[name] = {"snapshot_id": at, "type": "tag"}
-        self._save_refs(refs)
+        self._set_ref(name, version, "tag")
 
     def fast_forward(self, branch: str, to: str) -> None:
         """Iceberg `fast_forward(branch, to)` — the publish step of
@@ -511,8 +545,6 @@ class ParquetSnapshotTable:
         `properties` are Iceberg-style TBLPROPERTIES; the
         `write.parquet.*` layout knobs take effect on every append."""
         if os.path.exists(self.path):
-            import shutil
-
             shutil.rmtree(self.path)  # drop-with-purge semantics
         os.makedirs(self.path)
         self._save(
@@ -555,11 +587,10 @@ class ParquetSnapshotTable:
         between a point-lookup touching one row group and touching all of
         them."""
         cur, sid = self._head(branch)
-        files = self._write_data_files(df, cur, sid, num_files=num_files, sort_by=sort_by)
-        new_cols, new_types = self._evolved_schema(cur, df)
-        sig = _schema_sig(df.schema)
+        entries = self._write_data_files(df, cur, sid, num_files=num_files, sort_by=sort_by)
+        new_cols, new_types = self._evolved_schema(cur, df.schema)
         changes: dict = dict(
-            data_files=cur.data_files + [[f, sid, sig] for f in files],
+            data_files=cur.data_files + entries,
             columns=new_cols,
             column_types=new_types,
         )
@@ -583,15 +614,15 @@ class ParquetSnapshotTable:
         num_files: int | None = None,
         sort_by: list[str] | None = None,
         name_prefix: str = "snap",
-    ) -> list[str]:
+    ) -> list[list]:
         """Write a batch as data files and publish them into the shared
         `data/<partition>/` tree (Iceberg's write-then-commit: files land
         uncommitted in a staging dir, then move — same-filesystem rename —
         into the table layout; only the subsequent metadata commit makes
         them visible).  All snapshots share one partition-dir tree, so the
         whole table scans as a single leaf-file parquet read with
-        `basePath` partition discovery.  Returns the published file
-        paths."""
+        `basePath` partition discovery.  Returns the data-file entries
+        `[path, sid, schema_sig]` for the commit."""
         out = df.drop(ROW_ID)  # ids are positional; rewritten rows get new ones
         if sort_by:
             out = out.repartitionByRange(num_files or 4, *sort_by).sortWithinPartitions(
@@ -618,26 +649,39 @@ class ParquetSnapshotTable:
             writer = writer.partitionBy(*cur.partition_by)
         writer.parquet(stage)
         data_dir = os.path.join(self.path, "data")
-        published: list[str] = []
+        sig = _schema_sig(out.schema)
+        entries: list[list] = []
         for f in sorted(glob.glob(os.path.join(stage, "**", "*.parquet"), recursive=True)):
             rel = os.path.relpath(os.path.dirname(f), stage)
             dest_dir = data_dir if rel == "." else os.path.join(data_dir, rel)
             os.makedirs(dest_dir, exist_ok=True)
             dest = os.path.join(dest_dir, f"{name_prefix}-{sid}-{os.path.basename(f)}")
             os.rename(f, dest)
-            published.append(dest)
+            entries.append([dest, sid, sig])
         shutil.rmtree(stage, ignore_errors=True)
-        return published
+        return entries
+
+    def _write_delete_file(
+        self, df: DataFrame, sid: int, equality_columns: list[str] | None = None
+    ) -> list:
+        """Write one delete file and return its entry `[path, sid, mode,
+        equality_columns]`: an equality delete when `equality_columns` is
+        given (`df` holds their value tuples), else positional (`df` holds
+        ROW_ID)."""
+        path = os.path.join(self.path, "deletes", f"snap-{sid}-{uuid.uuid4().hex[:8]}")
+        df.write.mode("overwrite").parquet(path)
+        if equality_columns:
+            return [path, sid, "equality", list(equality_columns)]
+        return [path, sid, "positional", []]
 
     @staticmethod
-    def _evolved_schema(cur: Snapshot, df: DataFrame) -> tuple[list[str], dict[str, str]]:
-        new_cols = cur.columns + [
-            c for c in df.columns if c not in cur.columns and c != ROW_ID
-        ]
+    def _evolved_schema(cur: Snapshot, schema) -> tuple[list[str], dict[str, str]]:
+        """(columns, column types) after writing `schema`: new columns
+        append in write order, types take the written ones."""
+        fields = [f for f in schema.fields if f.name != ROW_ID]
+        new_cols = cur.columns + [f.name for f in fields if f.name not in cur.columns]
         new_types = dict(cur.column_types)
-        for f_ in df.schema.fields:
-            if f_.name != ROW_ID:
-                new_types[f_.name] = f_.dataType.simpleString()
+        new_types.update((f.name, f.dataType.simpleString()) for f in fields)
         return new_cols, new_types
 
     def add_files(self, file_dirs: list[str]) -> Snapshot:
@@ -650,13 +694,7 @@ class ParquetSnapshotTable:
         the reference scenario is a survey-declared non-goal."""
         cur, sid = self._head()
         schema = self.spark.read.parquet(*file_dirs).schema
-        new_cols = cur.columns + [
-            f.name for f in schema.fields if f.name not in cur.columns and f.name != ROW_ID
-        ]
-        new_types = dict(cur.column_types)
-        for f_ in schema.fields:
-            if f_.name != ROW_ID:
-                new_types[f_.name] = f_.dataType.simpleString()
+        new_cols, new_types = self._evolved_schema(cur, schema)
         # Unpartitioned externals register per-FILE (uniform with native
         # entries); a hive-partitioned external root stays one directory
         # entry so its partition values get per-root inference at read.
@@ -699,22 +737,14 @@ class ParquetSnapshotTable:
         mode='equality' without `equality_columns` degrades to the
         row-visibility-equivalent positional file (the r1 behavior)."""
         cur, sid = self._head(branch)
-        del_dir = os.path.join(self.path, "deletes", f"snap-{sid}-{uuid.uuid4().hex[:8]}")
-        if mode == "equality" and equality_columns:
-            values = (
-                self.read(ref=branch).filter(condition).select(*equality_columns).distinct()
-            )
-            values.write.mode("overwrite").parquet(del_dir)
-            entry = [del_dir, sid, "equality", list(equality_columns)]
-        else:
-            matching = self.read(ref=branch).filter(condition).select(ROW_ID)
-            matching.write.mode("overwrite").parquet(del_dir)
-            entry = [del_dir, sid, "positional", []]
+        matching = self.read(ref=branch).filter(condition)
+        eq_cols = equality_columns if mode == "equality" else None
+        victims = matching.select(*eq_cols).distinct() if eq_cols else matching.select(ROW_ID)
         return self._commit(
             f"delete-{mode}",
             expected_parent=cur.snapshot_id,
             branch=branch,
-            delete_files=cur.delete_files + [entry],
+            delete_files=cur.delete_files + [self._write_delete_file(victims, sid, eq_cols)],
         )
 
     def merge_upsert(self, df: DataFrame, keys: list[str]) -> Snapshot:
@@ -798,22 +828,17 @@ class ParquetSnapshotTable:
                 else new_rows.unionByName(inserts, allowMissingColumns=True)
             )
         # write both files BEFORE the single metadata commit
-        del_dir = os.path.join(
-            self.path, "deletes", f"snap-{sid}-{uuid.uuid4().hex[:8]}"
-        )
-        victims.write.mode("overwrite").parquet(del_dir)
+        delete_entry = self._write_delete_file(victims, sid, keys)
         data_entries: list[list] = []
         new_cols, new_types = list(cur.columns), dict(cur.column_types)
         if new_rows is not None:
-            files = self._write_data_files(new_rows, cur, sid)
-            sig = _schema_sig(new_rows.schema)
-            data_entries = [[f, sid, sig] for f in files]
-            new_cols, new_types = self._evolved_schema(cur, new_rows)
+            data_entries = self._write_data_files(new_rows, cur, sid)
+            new_cols, new_types = self._evolved_schema(cur, new_rows.schema)
         return self._commit(
             "merge",
             expected_parent=cur.snapshot_id,
             data_files=cur.data_files + data_entries,
-            delete_files=cur.delete_files + [[del_dir, sid, "equality", list(keys)]],
+            delete_files=cur.delete_files + [delete_entry],
             columns=new_cols,
             column_types=new_types,
         )
@@ -829,36 +854,30 @@ class ParquetSnapshotTable:
         (e.g. ``{"qty": "qty + 1"}``)."""
         cur, sid = self._head(branch)
         matched = self.read(ref=branch).filter(condition)
-        victims = matched.select(ROW_ID)
         updated = matched.select(
             *[
                 F.expr(set_exprs[c]).alias(c) if c in set_exprs else F.col(c)
                 for c in cur.columns
             ]
         )
-        del_dir = os.path.join(
-            self.path, "deletes", f"snap-{sid}-{uuid.uuid4().hex[:8]}"
-        )
-        victims.write.mode("overwrite").parquet(del_dir)
-        files = self._write_data_files(updated, cur, sid)
-        sig = _schema_sig(updated.schema)
+        delete_entry = self._write_delete_file(matched.select(ROW_ID), sid)
         return self._commit(
             "update",
             expected_parent=cur.snapshot_id,
             branch=branch,
-            data_files=cur.data_files + [[f, sid, sig] for f in files],
-            delete_files=cur.delete_files + [[del_dir, sid, "positional", []]],
+            data_files=cur.data_files + self._write_data_files(updated, cur, sid),
+            delete_files=cur.delete_files + [delete_entry],
         )
 
     def add_column(self, name: str) -> Snapshot:
         """E2: ALTER TABLE ADD COLUMN (null-filled for existing rows)."""
-        cur = self._load()[-1]
+        cur = self._head()[0]
         return self._commit("add-column", columns=cur.columns + [name])
 
     def drop_column(self, name: str) -> Snapshot:
         """E2: ALTER TABLE DROP COLUMN (projection-level; files untouched,
         exactly like Iceberg's metadata-only drop)."""
-        cur = self._load()[-1]
+        cur = self._head()[0]
         return self._commit("drop-column", columns=[c for c in cur.columns if c != name])
 
     def set_partition_fields(self, partition_by: list[str]) -> Snapshot:
@@ -884,45 +903,27 @@ class ParquetSnapshotTable:
         This is how compaction runs at 100 TB: per partition, bin-packing
         small files, never a table-wide rewrite."""
         cur, sid = self._head()
-        selected = self._prune_entries(cur.data_files, where)
-        if where is not None and len(selected) < len(cur.data_files):
-            sel_files = {f for e in selected for f in _entry_files(e[0])}
-            rest = [e for e in cur.data_files if e[0] not in {s[0] for s in selected}]
-            # visible rows OF THE SELECTED FILES ONLY (deletes applied);
-            # the row-id's file field is exactly the scan's file path
-            # row-id file field carries the reader's URI form
-            # (file:/...); normalize like the seq-map join does
-            current = (
-                self.read()
-                .filter(
-                    F.regexp_replace(
-                        F.col(f"{ROW_ID}.file"), r"^file:/+", "/"
-                    ).isin(*sorted(sel_files))
-                )
-                .drop(ROW_ID)
-            )
-            files = self._write_data_files(
-                current, cur, sid, num_files=target_files, name_prefix="compact"
-            )
-            sig = _schema_sig(current.schema)
-            return self._commit(
-                "compact",
-                expected_parent=cur.snapshot_id,
-                data_files=rest + [[f, sid, sig] for f in files],
-                delete_files=list(cur.delete_files),
-            )
+        selected = {e[0] for e in self._prune_entries(cur.data_files, where)}
+        rest = [e for e in cur.data_files if e[0] not in selected]
         # visible rows, deletes applied; positional ids are NOT carried over
         # (rewritten rows get fresh (file, pos) keys, as in Iceberg rewrites)
-        current = self.read(with_row_id=False)
-        files = self._write_data_files(
-            current, cur, sid, num_files=target_files, name_prefix="compact"
-        )
-        sig = _schema_sig(current.schema)
+        current = self.read(with_row_id=bool(rest))
+        if rest:
+            # visible rows OF THE SELECTED FILES ONLY: the row id's file
+            # field is the scan's file path
+            sel_files = sorted({f for p in selected for f in _entry_files(p)})
+            current = current.filter(
+                _norm_path(F.col(f"{ROW_ID}.file")).isin(*sel_files)
+            ).drop(ROW_ID)
         return self._commit(
             "compact",
             expected_parent=cur.snapshot_id,
-            data_files=[[f, sid, sig] for f in files],
-            delete_files=[],
+            data_files=rest
+            + self._write_data_files(
+                current, cur, sid, num_files=target_files, name_prefix="compact"
+            ),
+            # delete files still apply to the files left unrewritten
+            delete_files=list(cur.delete_files) if rest else [],
         )
 
     def remove_orphan_files(self) -> list[str]:
@@ -968,12 +969,10 @@ class ParquetSnapshotTable:
             .sortWithinPartitions(Z_COL)
             .drop(Z_COL)
         )
-        files = self._write_data_files(arranged, cur, sid, name_prefix="zorder")
-        sig = _schema_sig(arranged.schema)
         return self._commit(
             "zorder",
             expected_parent=cur.snapshot_id,
-            data_files=[[f, sid, sig] for f in files],
+            data_files=self._write_data_files(arranged, cur, sid, name_prefix="zorder"),
             delete_files=[],
         )
 
@@ -982,13 +981,7 @@ class ParquetSnapshotTable:
         at an older snapshot's file lists — history is append-only, the
         rollback itself is recorded, and the rolled-past snapshots stay
         time-travelable."""
-        snaps = self._load()
-        try:
-            target = next(s for s in snaps if s.snapshot_id == version)
-        except StopIteration:
-            raise ValueError(
-                f"no snapshot {version}; table has versions 0..{snaps[-1].snapshot_id}"
-            ) from None
+        target = self._resolve(self._load(), version=version)
         return self._commit(
             "rollback",
             data_files=list(target.data_files),
@@ -1009,8 +1002,7 @@ class ParquetSnapshotTable:
             raise ValueError("keep_last must be >= 1")
         # snapshots pinned by a branch or tag never expire (Iceberg refuses
         # to expire ref-reachable snapshots)
-        refs = self._load_refs() or {}
-        pinned = {r["snapshot_id"] for r in refs.values()}
+        pinned = {r["snapshot_id"] for r in self._refs(snaps).values()}
         keep = [
             s
             for i, s in enumerate(snaps)
@@ -1198,12 +1190,7 @@ class ParquetSnapshotTable:
         `tbl.files` + `tbl.delete_files` in one relation.  `content` is
         'data' or the delete mode; `sequence_number` is what equality
         deletes compare against."""
-        snaps = self._load()
-        snap = (
-            snaps[-1]
-            if version is None
-            else next(s for s in snaps if s.snapshot_id == version)
-        )
+        snap = self._resolve(self._load(), version=version)
         rows = [("data", e[0], int(e[1])) for e in snap.data_files] + [
             (e[2], e[0], int(e[1])) for e in snap.delete_files
         ]
@@ -1237,17 +1224,7 @@ class ParquetSnapshotTable:
         tuple — the reference collects exactly these metrics at write time
         (`IcebergTableGenerator.java:420`) and Iceberg answers `tbl.files`
         from manifests the same way: no data rows are touched."""
-        if ref is not None:
-            refs = self._load_refs() or {}
-            if ref not in refs:
-                raise ValueError(f"unknown ref {ref!r}")
-            version = refs[ref]["snapshot_id"]
-        snaps = self._load()
-        snap = (
-            snaps[-1]
-            if version is None
-            else next(s for s in snaps if s.snapshot_id == version)
-        )
+        snap = self._resolve(self._load(), version=version, ref=ref)
         stats = self._load_stats()
         rows = []
         for e in snap.data_files:
@@ -1268,11 +1245,9 @@ class ParquetSnapshotTable:
         snapshot each points at).  Before any branch/tag exists, `main` is
         reported implicitly at the log tail, mirroring what `read()`
         resolves."""
-        refs = self._load_refs() or {
-            "main": {"snapshot_id": self._load()[-1].snapshot_id, "type": "branch"}
-        }
         rows = [
-            (name, v["type"], v["snapshot_id"]) for name, v in sorted(refs.items())
+            (name, v["type"], v["snapshot_id"])
+            for name, v in sorted(self._refs(self._load()).items())
         ]
         return self.spark.createDataFrame(
             rows, "name string, type string, snapshot_id int"
@@ -1287,12 +1262,7 @@ class ParquetSnapshotTable:
         single data row.  Dir-registered external roots (partitioned
         add_files) carry no per-file stats and are excluded; their
         partition values are inferred at scan time instead."""
-        snaps = self._load()
-        snap = (
-            snaps[-1]
-            if version is None
-            else next(s for s in snaps if s.snapshot_id == version)
-        )
+        snap = self._resolve(self._load(), version=version)
         stats = self._load_stats()
         agg: dict[str, list[int]] = {}
         for e in snap.data_files:
@@ -1333,36 +1303,9 @@ class ParquetSnapshotTable:
         always applied too, so unparseable/partial predicates only lose
         pruning, never correctness; partition-column conjuncts additionally
         prune hive directories through the pushed-down scan filter."""
-        snaps = self._load()
-        if sum(x is not None for x in (version, as_of_timestamp_ms, ref)) > 1:
-            raise ValueError("pass at most one of version / as_of_timestamp_ms / ref")
-        if ref is not None:
-            refs = self._load_refs() or {}
-            if ref not in refs and ref != "main":
-                raise ValueError(f"unknown ref {ref!r}")
-            if ref in refs:
-                version = refs[ref]["snapshot_id"]
-        elif version is None and as_of_timestamp_ms is None:
-            refs = self._load_refs()
-            if refs is not None:
-                version = refs["main"]["snapshot_id"]
-        if as_of_timestamp_ms is not None:
-            eligible = [s for s in snaps if s.timestamp_ms <= as_of_timestamp_ms]
-            if not eligible:
-                raise ValueError(
-                    f"no snapshot at or before {as_of_timestamp_ms} "
-                    f"(oldest is {snaps[0].timestamp_ms})"
-                )
-            snap = eligible[-1]
-        elif version is None:
-            snap = snaps[-1]
-        else:
-            try:
-                snap = next(s for s in snaps if s.snapshot_id == version)
-            except StopIteration:
-                raise ValueError(
-                    f"no snapshot {version}; table has versions 0..{snaps[-1].snapshot_id}"
-                ) from None
+        snap = self._resolve(
+            self._load(), version=version, ref=ref, as_of_timestamp_ms=as_of_timestamp_ms
+        )
         scan_entries = self._prune_entries(snap.data_files, where)
         if not scan_entries:
             # Empty table (or every file pruned by the predicate): honor the
@@ -1438,10 +1381,7 @@ class ParquetSnapshotTable:
             # on a scan relation, so a multi-group schema union would
             # otherwise break here)
             df = (
-                df.withColumn(
-                    "__file",
-                    F.regexp_replace(F.col(f"{ROW_ID}.file"), r"^file:/+", "/"),
-                )
+                df.withColumn("__file", _norm_path(F.col(f"{ROW_ID}.file")))
                 .join(F.broadcast(seq_map), "__file")
                 .drop("__file")
             )
@@ -1476,7 +1416,7 @@ class ParquetSnapshotTable:
             vals = (
                 self.spark.read.option("mergeSchema", "true")
                 .parquet(*[p for p, _ in entries])
-                .withColumn("__file", _file_path_norm())
+                .withColumn("__file", _norm_path(F.col("_metadata.file_path")))
                 .join(F.broadcast(del_map), "__file")
                 .groupBy(*eq_cols)
                 .agg(F.max("__del_seq").alias("__del_seq"))

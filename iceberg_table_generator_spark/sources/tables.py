@@ -60,16 +60,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every testdata table and register temp views (for spark.sql)."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLE_NAMES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
 def spread(df: DataFrame) -> DataFrame:
     """Widen an under-split relation to the cluster's parallelism before
     expensive per-row work (tokenize/shingle/hash/encode pipelines).

@@ -29,6 +29,11 @@ from iceberg_table_generator_spark.sources.lifecycle import ParquetSnapshotTable
 EPOCH_PROP = "streaming.last-epoch"
 
 
+def _last_epoch(table: ParquetSnapshotTable) -> int:
+    """The last epoch committed at the table's main head (-1 if none)."""
+    return int(table._head()[0].properties.get(EPOCH_PROP, -1))
+
+
 def snapshot_epoch_sink(table: ParquetSnapshotTable, num_files: int | None = None):
     """foreachBatch handler committing each micro-batch as one snapshot,
     idempotent on the epoch id.  Exposed separately from the query wiring
@@ -36,9 +41,7 @@ def snapshot_epoch_sink(table: ParquetSnapshotTable, num_files: int | None = Non
     batch_id: the second call must be a no-op)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        head = table._head()[0]
-        last = int(head.properties.get(EPOCH_PROP, -1))
-        if batch_id <= last:
+        if batch_id <= _last_epoch(table):
             return  # replayed epoch: already committed atomically with its data
         table.append(
             batch_df,
@@ -91,47 +94,34 @@ def snapshot_epoch_sink_with_agg(
         # localCheckpoint: both commits must see the same rows even if the
         # source rescans nondeterministically
         batch_df = batch_df.localCheckpoint(eager=True)
-        marker = {EPOCH_PROP: str(batch_id)}
-        if int(table._head()[0].properties.get(EPOCH_PROP, -1)) < batch_id:
-            table.append(batch_df, properties=marker)
-        if int(agg_table._head()[0].properties.get(EPOCH_PROP, -1)) < batch_id:
-            head = agg_table._head()[0]
-            if head.data_files:
-                base = agg_table.read(with_row_id=False)
-            else:
-                base = None
-            delta = batch_df.withColumn("_change_type", F.lit("insert"))
-            if base is None:
-                new_state = (
-                    delta.groupBy(*keys)
-                    .agg(
-                        F.count(F.lit(1)).alias(count_col),
-                        *[
-                            F.sum(F.col(src)).alias(out)
-                            for out, src in sum_cols.items()
-                        ],
-                    )
-                )
-            else:
-                new_state = apply_agg_delta(base, delta, keys, sum_cols, count_col)
-            # full-state rewrite per epoch: state is O(groups), tiny next
-            # to the batch; at scale this becomes a MERGE on the group key
-            cur, sid = agg_table._head()
-            files = agg_table._write_data_files(
+        if _last_epoch(table) < batch_id:
+            table.append(batch_df, properties={EPOCH_PROP: str(batch_id)})
+        cur, sid = agg_table._head()
+        if int(cur.properties.get(EPOCH_PROP, -1)) >= batch_id:
+            return
+        delta = batch_df.withColumn("_change_type", F.lit("insert"))
+        if cur.data_files:
+            base = agg_table.read(with_row_id=False)
+            new_state = apply_agg_delta(base, delta, keys, sum_cols, count_col)
+        else:
+            new_state = delta.groupBy(*keys).agg(
+                F.count(F.lit(1)).alias(count_col),
+                *[F.sum(F.col(src)).alias(out) for out, src in sum_cols.items()],
+            )
+        # full-state rewrite per epoch: state is O(groups), tiny next
+        # to the batch; at scale this becomes a MERGE on the group key
+        agg_table._commit(
+            "overwrite",
+            expected_parent=cur.snapshot_id,
+            data_files=agg_table._write_data_files(
                 new_state, cur, sid, num_files=1, name_prefix="aggstate"
-            )
-            from iceberg_table_generator_spark.sources.lifecycle import _schema_sig
-
-            agg_table._commit(
-                "overwrite",
-                expected_parent=cur.snapshot_id,
-                data_files=[[f, sid, _schema_sig(new_state.schema)] for f in files],
-                columns=list(new_state.columns),
-                column_types={
-                    f.name: f.dataType.simpleString() for f in new_state.schema.fields
-                },
-                properties={**cur.properties, EPOCH_PROP: str(batch_id)},
-            )
+            ),
+            columns=list(new_state.columns),
+            column_types={
+                f.name: f.dataType.simpleString() for f in new_state.schema.fields
+            },
+            properties={**cur.properties, EPOCH_PROP: str(batch_id)},
+        )
 
     return process
 

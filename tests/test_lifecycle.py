@@ -84,6 +84,18 @@ def test_schema_evolution(spark, tmp_path):
     assert "product_id" in v1.columns
 
 
+def test_schema_evolution_targets_main_head(spark, tmp_path):
+    """ADD/DROP COLUMN evolve main's schema even when a branch commit
+    (which added its own column) is the log tail."""
+    t = ParquetSnapshotTable(spark, str(tmp_path / "evo_branch")).create(["k"])
+    t.append(spark.range(3).select(F.col("id").alias("k")))
+    t.create_branch("audit")
+    t.append(spark.range(3).select(F.col("id").alias("k"), F.lit(1).alias("x")), branch="audit")
+    assert t.add_column("y").columns == ["k", "y"]
+    assert t.drop_column("y").columns == ["k"]
+    assert t.read(ref="audit").columns[:2] == ["k", "x"]
+
+
 def test_partition_evolution(spark, tmp_path):
     t = scenarios.orders_with_partition_evolution(spark, str(tmp_path / "pevo"))
     assert t.read().count() == 600
@@ -559,6 +571,12 @@ def test_metadata_tables_lineage_after_compact_and_rollback(spark, tmp_path):
     v4 = t.files_table(version=4).collect()
     assert len(v4) == 1 and "compact-4-" in v4[0].file_path
     assert v4[0].sequence_number == 4
+    # an unknown version is a ValueError on every reader, as in read()
+    import pytest
+
+    for reader in (t.read, t.files_table, t.files_stats_table, t.partitions_table):
+        with pytest.raises(ValueError, match="no snapshot 99"):
+            reader(version=99)
     # history: linear parent chain, all ancestors of current
     hist = t.history_table().orderBy("snapshot_id").collect()
     assert [r.snapshot_id for r in hist] == [0, 1, 2, 3, 4, 5]
@@ -640,6 +658,10 @@ def test_partitions_table_counts_per_partition(spark, tmp_path):
     # historical snapshot still reports the pre-compact layout
     pre = {r["partition_value"]: r["record_count"] for r in t.partitions_table(version=1).collect()}
     assert pre == {"grp=0": 10, "grp=1": 10}
+    # the implicit `main` ref resolves on an unbranched table, as in read()
+    by_ref = t.files_stats_table(ref="main").collect()
+    assert sorted(by_ref) == sorted(t.files_stats_table().collect())
+    assert sum(r["record_count"] for r in by_ref) == 16
 
 
 def test_refs_table_lists_branches_and_tags(spark, tmp_path):

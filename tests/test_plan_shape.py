@@ -55,6 +55,14 @@ EXPLAINED: dict[str, str] = {
         "dropping the collect_list + simhash() exchanges (4 → 3); pinned "
         "2.35 → 1.29 s at sf0.1, oracle-green 3 SFs"
     ),
+    "text_source_vocab_overlap": (
+        "r15 (a87f6db): spread() widens the one-split documents scan "
+        "before tokenize→shingle→explode, and the per-source totals are "
+        "the diagonal of one persisted ≤|sources|² pair aggregate instead "
+        "of a second read of the corpus-sized source-set persist "
+        "(plans/r15/text_source_vocab_overlap_{before,after}.txt); more "
+        "exchanges (4 → 7) but 5.12 → 1.22 s at sf0.1"
+    ),
 }
 
 

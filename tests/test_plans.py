@@ -470,3 +470,33 @@ def test_wide_correlation_prunes_and_single_pass(spark, sf_small):
     df = wide_metrics_correlation(spark, sf_small)
     (schema,) = explain.read_schemas(df)
     assert set(schema) == set(_PICKED), schema
+
+
+def test_generate_filter_inference_stays_excluded(spark, sf_small):
+    """The session excludes `InferFiltersFromGenerate` (see
+    `session.RUNTIME_SQL_CONFS`): with the rule, every shingle explode
+    gets a `size(<whole shingle expression>) > 0` filter under its
+    Generate, which runs the heaviest per-row work of the text/dedup
+    family twice.  The conf must come from both `get_spark()` and
+    `ensure_session_confs`, and the optimized plan must carry no such
+    filter."""
+    import pyspark.sql.functions as F
+
+    from iceberg_table_generator_spark.operators.dedup import shingles, tokenize
+    from iceberg_table_generator_spark.session import ensure_session_confs
+    from iceberg_table_generator_spark.sources.tables import load_table
+
+    key = "spark.sql.optimizer.excludedRules"
+    rule = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+    assert rule in spark.conf.get(key, "")  # the get_spark() session
+    spark.conf.unset(key)
+    ensure_session_confs(spark)
+    assert rule in spark.conf.get(key, "")
+
+    docs = load_table(spark, sf_small, "documents")
+    df = shingles(tokenize(docs)).select("doc_id", F.explode("shingles").alias("s"))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    under_generate = plan[plan.index("Generate"):]
+    assert not [
+        line for line in under_generate.splitlines() if "Filter" in line and "size(" in line
+    ], under_generate
